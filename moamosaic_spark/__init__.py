@@ -16,8 +16,8 @@ dataflow over tables:
       -> ordered sink + stats finalize + lineage checkpoint
 
 No GDAL dependency; rasters exist only as tables. All per-pixel work is
-vectorized numpy inside Arrow-batched ``applyInPandas`` kernels — no
-per-row Python anywhere.
+vectorized numpy inside grouped ``applyInArrow`` kernels — no per-row
+Python anywhere.
 """
 
 __version__ = "0.1.0"

@@ -28,9 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .plans import grid as gridmod
 from .plans.grid import OutputGrid, make_tile_relation, overview_levels
 from .plans.spatial_join import assign_inputs
-from .operators.stitch import make_stitch_fn
+from .operators.stitch import make_stitch_fn_arrow
 from .operators.stats import finalize_stats
-from .schema import STITCH_SCHEMA
+from .schema import STITCH_SCHEMA, STITCH_SCHEMA_U2
 
 
 class MoaProjectionError(Exception):
@@ -50,17 +50,15 @@ class MosaicConfig:
     check_projections: bool = True
     check_blocks: bool = False         # integrity prepass over the blocks table
     with_overviews: bool = True
-    kernel: str = "arrow"              # 'arrow' (applyInArrow) | 'pandas'
     # 'last' (reference) | 'nearest' (kNN ext) | 'blend' (feathered
     # edge-blending: overlap pixels weighted by distance to each
     # contributor's source edge — nodata-aware, seams fade)
     merge_policy: str = "last"
     blend_feather: int = 64            # feather width (px) for 'blend'
-    stitch_salt: int = 1               # >1: two-stage salted merge for hot tiles
-    # tiles with fewer contributors than this skip the two-stage path
-    # (stage 1 only pays off when contributors >> buckets);
-    # None -> 2 * stitch_salt
-    stitch_hot_threshold: int | None = None
+    # >1: two-stage salted merge for hot tiles — those with at least
+    # max(2, 2 * stitch_salt) contributors (stage 1 only pays off when
+    # contributors >> buckets)
+    stitch_salt: int = 1
     # incremental sink partition count: touched-tile rewrites replace a
     # whole `part=` partition, so each partition holds ~1/sink_parts of
     # the mosaic. Size it so one partition is a bounded rewrite at the
@@ -377,6 +375,65 @@ def _null_tile_rows(
     return out
 
 
+def _restrict_tiles(
+    df: DataFrame, tile_row_range: tuple[int, int] | None, tile_keys: DataFrame | None
+) -> DataFrame:
+    """Restrict a (tile_row, tile_col)-keyed relation to a half-open
+    tile-row range and/or an explicit tile key set. The key set is
+    small by construction (a micro-batch's touched tiles); the
+    broadcast semi-join keeps ``df``'s distribution, which the
+    relayout path's bucketed scan needs to stay Exchange-free."""
+    if tile_row_range is not None:
+        lo, hi = tile_row_range
+        df = df.where(
+            (F.col("tile_row") >= F.lit(int(lo))) & (F.col("tile_row") < F.lit(int(hi)))
+        )
+    if tile_keys is not None:
+        df = df.join(
+            F.broadcast(tile_keys.select("tile_row", "tile_col").distinct()),
+            on=["tile_row", "tile_col"],
+            how="left_semi",
+        )
+    return df
+
+
+def _stitch_tail(
+    spark: SparkSession, work: DataFrame, tiles: DataFrame, covered: DataFrame,
+    assignments: DataFrame, grid: OutputGrid, levels: list, config: MosaicConfig,
+    blocksize: int, binary: bool, kernel=None,
+) -> MosaicResult:
+    """Everything from the stitch on, shared by the direct dataflow and
+    the relayout path: ONE groupBy(band, tile).applyInArrow stitch over
+    ``work``, the pure-null fill for the ``tiles`` no ``covered`` row
+    reaches, and the result assembly. ``kernel`` replaces the default
+    stitch UDF (the salted blend's stage 2)."""
+    if kernel is None:
+        kernel = make_stitch_fn_arrow(grid, levels, config.merge_policy, binary=binary,
+                                      feather=config.blend_feather)
+    stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(
+        kernel, STITCH_SCHEMA_U2 if binary else STITCH_SCHEMA
+    )
+    gap_tiles = tiles.join(
+        covered.select("tile_row", "tile_col").distinct(),
+        on=["tile_row", "tile_col"],
+        how="left_anti",
+    )
+    stitched = stitched.unionByName(
+        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews,
+                        binary=binary)
+    )
+    return MosaicResult(
+        grid=grid,
+        levels=levels,
+        tiles=stitched.where(F.col("level") == 0),
+        overviews=stitched.where(F.col("level") > 0),
+        stats=finalize_stats(stitched),
+        assignments=assignments,
+        stitched=stitched,
+        blocksize=blocksize,
+    )
+
+
 def do_mosaic(
     spark: SparkSession,
     footprints: DataFrame,
@@ -448,21 +505,9 @@ def do_mosaic(
         if config.with_overviews
         else []
     )
-    tiles = make_tile_relation(spark, grid, config.blocksize)
-    if tile_row_range is not None:
-        lo, hi = tile_row_range
-        tiles = tiles.where(
-            (F.col("tile_row") >= F.lit(int(lo))) & (F.col("tile_row") < F.lit(int(hi)))
-        )
-    if tile_keys is not None:
-        # semi-join against the requested tile set; left small by
-        # construction (a micro-batch's touched tiles), AQE converts it
-        # to a broadcast join at runtime when it is.
-        tiles = tiles.join(
-            tile_keys.select("tile_row", "tile_col").distinct(),
-            on=["tile_row", "tile_col"],
-            how="left_semi",
-        )
+    tiles = _restrict_tiles(
+        make_tile_relation(spark, grid, config.blocksize), tile_row_range, tile_keys
+    )
     assignments = assign_inputs(
         tiles,
         footprints,
@@ -477,13 +522,12 @@ def do_mosaic(
     # u2 binary layout halves the bytes of the stitch shuffle and the
     # sink; the stitch output mirrors the input layout.
     from .pixels import pixels_are_binary
-    from .schema import PARTIAL_MERGE_SCHEMA_U2, STITCH_SCHEMA_U2
+    from .schema import PARTIAL_MERGE_SCHEMA_U2
 
     binary = pixels_are_binary(blocks)
-    stitch_schema = STITCH_SCHEMA_U2 if binary else STITCH_SCHEMA
-
     work = _contributor_chunks(assignments, blocks, config.src_blocksize)
 
+    kernel = None  # the default stitch UDF
     if config.stitch_salt > 1:
         # Two-stage salted merge for hot tiles (many contributors): the
         # writer-serialization analog the reference cannot split. Stage
@@ -495,8 +539,6 @@ def do_mosaic(
             # 'nearest' carries per-pixel arg-min state a value-only
             # partial cannot decompose
             raise ValueError("stitch_salt requires merge_policy 'last' or 'blend'")
-        if config.kernel != "arrow":
-            raise ValueError("stitch_salt requires kernel='arrow'")
         from pyspark.sql import Window
 
         from .operators.stitch import make_partial_merge_fn_arrow
@@ -523,11 +565,7 @@ def do_mosaic(
         # take the two-stage path, cold rows go straight to the final
         # stitch (union is schema-aligned: the stitch kernel consumes
         # the PARTIAL_MERGE column set either way).
-        threshold = (
-            config.stitch_hot_threshold
-            if config.stitch_hot_threshold is not None
-            else max(2, 2 * config.stitch_salt)
-        )
+        threshold = max(2, 2 * config.stitch_salt)
         counts = assignments.groupBy("tile_row", "tile_col").agg(
             F.count("*").alias("_nc")
         )
@@ -540,7 +578,9 @@ def do_mosaic(
             # commutative decomposition (stitch.py:
             # make_blend_partial_fn_arrow); cold rows ride along with
             # null canvases and fold as raw contributors in stage 2
-            from .operators.stitch import make_blend_partial_fn_arrow
+            from .operators.stitch import (
+                make_blend_partial_fn_arrow, make_blend_stitch_fn_arrow,
+            )
             from .schema import BLEND_PARTIAL_SCHEMA, BLEND_PARTIAL_SCHEMA_U2
 
             bp_schema = BLEND_PARTIAL_SCHEMA_U2 if binary else BLEND_PARTIAL_SCHEMA
@@ -556,6 +596,8 @@ def do_mosaic(
             work = merged_hot.unionByName(
                 cold.select(*[f.name for f in bp_schema.fields])
             )
+            kernel = make_blend_stitch_fn_arrow(grid, levels, config.blend_feather,
+                                                binary=binary)
         else:
             pm_schema = PARTIAL_MERGE_SCHEMA_U2 if binary else PARTIAL_MERGE_SCHEMA
             merged_hot = salted.groupBy(
@@ -567,55 +609,8 @@ def do_mosaic(
                 work_cold.select(*[f.name for f in pm_schema.fields])
             )
 
-    grouped = work.groupBy("band", "tile_row", "tile_col")
-    if config.stitch_salt > 1 and config.merge_policy == "blend":
-        from .operators.stitch import make_blend_stitch_fn_arrow
-
-        stitched = grouped.applyInArrow(
-            make_blend_stitch_fn_arrow(grid, levels, config.blend_feather,
-                                       binary=binary),
-            stitch_schema,
-        )
-    elif config.kernel == "arrow":
-        from .operators.stitch import make_stitch_fn_arrow
-
-        stitched = grouped.applyInArrow(
-            make_stitch_fn_arrow(grid, levels, config.merge_policy, binary=binary,
-                                 feather=config.blend_feather),
-            stitch_schema,
-        )
-    elif config.kernel == "pandas":
-        stitched = grouped.applyInPandas(
-            make_stitch_fn(grid, levels, config.merge_policy, binary=binary,
-                           feather=config.blend_feather),
-            stitch_schema,
-        )
-    else:
-        raise ValueError(f"unknown kernel: {config.kernel}")
-
-    gap_tiles = tiles.join(
-        assignments.select("tile_row", "tile_col").distinct(),
-        on=["tile_row", "tile_col"],
-        how="left_anti",
-    )
-    stitched = stitched.unionByName(
-        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews,
-                        binary=binary)
-    )
-
-    tiles_out = stitched.where(F.col("level") == 0)
-    overviews = stitched.where(F.col("level") > 0)
-    stats = finalize_stats(stitched)
-    return MosaicResult(
-        grid=grid,
-        levels=levels,
-        tiles=tiles_out,
-        overviews=overviews,
-        stats=stats,
-        assignments=assignments,
-        stitched=stitched,
-        blocksize=config.blocksize,
-    )
+    return _stitch_tail(spark, work, tiles, assignments, assignments, grid, levels,
+                        config, config.blocksize, binary, kernel=kernel)
 
 
 def write_mosaic(result: MosaicResult, path: str, partitions: int | None = None) -> None:

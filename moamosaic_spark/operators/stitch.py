@@ -21,16 +21,16 @@ Reference semantics replicated exactly:
   ``(top//lvl, left//lvl)``, clipped to the overview raster shape
   — mosaic.py:720-743
 
-All pixel math is numpy over Arrow-delivered batches; the only Python
-loop is per source *chunk* (a ~64K-pixel array), never per pixel/row.
-One fold implementation (`_fold_arrow_group`) serves both the full
-stitch and the salted stage-1 partial merge.
+Every kernel here is a grouped ``applyInArrow`` map. All pixel math is
+numpy over Arrow-delivered batches; the only Python loop is per source
+*chunk* (a ~64K-pixel array), never per pixel/row. One fold
+(`_fold_arrow_group`) serves the stitch and all three salted-stage
+kernels; one emit (`_emit_tile`) serves both final stitches.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from ..plans.grid import OutputGrid, overview_shape
@@ -266,33 +266,81 @@ def _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best, key)
                       in_top, in_left, src_nrows, src_ncols)
 
 
+def _tile_canvas(tbl: pa.Table, nullval: int) -> tuple:
+    """(top, left, all-null canvas) of the group's output tile."""
+    top, left, ysize, xsize = (
+        int(tbl.column(c)[0].as_py()) for c in ("top", "left", "ysize", "xsize")
+    )
+    return top, left, np.full((ysize, xsize), nullval, dtype=np.int32)
+
+
+def _group_key(key) -> tuple:
+    """The grouping key as Python ints (applyInArrow hands over Arrow
+    scalars)."""
+    return tuple(int(k.as_py() if hasattr(k, "as_py") else k) for k in key)
+
+
+def _bbox_row(written, key: tuple, top: int, left: int) -> tuple:
+    """Bounding box of the ``written`` pixels of a salted-stage partial
+    canvas, and the synthetic contributor row that carries it into
+    stage 2. An all-null bucket still emits a 1x1 null box: dropping it
+    entirely could drop the TILE from stage 2 when every bucket is
+    all-null, whereas the unsalted path emits a null tile for
+    assigned-but-all-null input. Returns ((row slice, col slice), row)."""
+    band, tile_row, tile_col, salt = key
+    ysize, xsize = written.shape
+    nn_rows = np.flatnonzero(written.any(axis=1))
+    nn_cols = np.flatnonzero(written.any(axis=0))
+    if nn_rows.size == 0:
+        r0, r1, c0, c1 = 0, 1, 0, 1
+    else:
+        r0, r1 = int(nn_rows[0]), int(nn_rows[-1]) + 1
+        c0, c1 = int(nn_cols[0]), int(nn_cols[-1]) + 1
+    row = {
+        "tile_row": tile_row, "tile_col": tile_col, "band": band,
+        "top": top, "left": left, "ysize": ysize, "xsize": xsize,
+        "priority": salt,
+        # window geometry: the bbox as a synthetic source placed so
+        # that src px (0,0) lands at tile-local (r0, c0):
+        # in_top = -r0 => pad offset row_off = r0; clamp keeps the
+        # bbox extent because src dims == bbox dims.
+        "in_top": -r0, "in_left": -c0,
+        "in_ysize": ysize, "in_xsize": xsize,
+        "src_nrows": r1 - r0, "src_ncols": c1 - c0,
+        "b_top": 0, "b_left": 0, "b_ysize": r1 - r0, "b_xsize": c1 - c0,
+    }
+    return (slice(r0, r1), slice(c0, c1)), row
+
+
+def _emit_tile(key, top, left, canvas, nullval, levels, ov_shapes, out_schema) -> pa.Table:
+    """A stitched tile's output rows: the level-0 row with its stats
+    partials, then its pyramid fragments."""
+    band, tile_row, tile_col = key
+    rows = [_base_row(band, tile_row, tile_col, top, left, canvas, nullval)]
+    rows += _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
+    return _rows_to_arrow(rows, out_schema)
+
+
 def make_stitch_fn_arrow(
     grid: OutputGrid, levels: list[int], policy: str = "last", binary: bool = False,
     feather: int = 64,
 ):
     """The applyInArrow kernel for groupBy(band, tile_row, tile_col):
-    reads pixel payloads zero-copy from the Arrow list buffers and emits
-    one batched ListArray — no pandas object-column churn. ``binary``
-    emits the u2 packed layout (input layout is auto-detected)."""
+    reads pixel payloads zero-copy from the Arrow buffers and emits one
+    batched pixel array. ``binary`` emits the u2 packed layout (input
+    layout is auto-detected)."""
     nullval = int(grid.nullval)
     ov_shapes = {lvl: overview_shape(grid.nrows, grid.ncols, lvl) for lvl in levels}
     out_schema = _binary_pixel_schema(ARROW_STITCH_SCHEMA) if binary else ARROW_STITCH_SCHEMA
 
     def stitch(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col = (int(k.as_py() if hasattr(k, "as_py") else k) for k in key)
+        key = _group_key(key)
         cols, offsets, values = _extract_arrow_group(tbl)
-        top, left = int(cols["top"][0]), int(cols["left"][0])
-        ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)
-        best = _policy_state(policy, ysize, xsize, feather)
-        _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best,
-                          (band, tile_row, tile_col))
+        top, left, canvas = _tile_canvas(tbl, nullval)
+        best = _policy_state(policy, *canvas.shape, feather)
+        _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best, key)
         _finalize_policy(canvas, policy, best)
-        rows = [_base_row(band, tile_row, tile_col, top, left, canvas, nullval)]
-        rows.extend(
-            _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
-        )
-        return _rows_to_arrow(rows, out_schema)
+        return _emit_tile(key, top, left, canvas, nullval, levels, ov_shapes, out_schema)
 
     return stitch
 
@@ -317,42 +365,12 @@ def make_partial_merge_fn_arrow(grid: OutputGrid, binary: bool = False):
     out_schema = _binary_pixel_schema(PARTIAL_SCHEMA) if binary else PARTIAL_SCHEMA
 
     def partial(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col, salt = (
-            int(k.as_py() if hasattr(k, "as_py") else k) for k in key
-        )
+        key = _group_key(key)
         cols, offsets, values = _extract_arrow_group(tbl)
-        top, left = int(cols["top"][0]), int(cols["left"][0])
-        ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)
-        _fold_arrow_group(cols, offsets, values, canvas, nullval, "last", None,
-                          (band, tile_row, tile_col, salt))
-
-        # bounding box of written (non-null) pixels. An all-null bucket
-        # still emits a 1x1 null box: dropping it entirely could drop the
-        # TILE from stage 2 when every bucket is all-null, whereas the
-        # unsalted path emits a null tile for assigned-but-all-null input.
-        nn_rows = np.flatnonzero((canvas != nullval).any(axis=1))
-        nn_cols = np.flatnonzero((canvas != nullval).any(axis=0))
-        if nn_rows.size == 0:
-            r0, r1, c0, c1 = 0, 1, 0, 1
-        else:
-            r0, r1 = int(nn_rows[0]), int(nn_rows[-1]) + 1
-            c0, c1 = int(nn_cols[0]), int(nn_cols[-1]) + 1
-        box = canvas[r0:r1, c0:c1]
-        row = {
-            "tile_row": tile_row, "tile_col": tile_col, "band": band,
-            "top": top, "left": left, "ysize": ysize, "xsize": xsize,
-            "priority": salt,
-            # window geometry: the bbox as a synthetic source placed so
-            # that src px (0,0) lands at tile-local (r0, c0):
-            # in_top = -r0 => pad offset row_off = r0; clamp keeps the
-            # bbox extent because src dims == bbox dims.
-            "in_top": -r0, "in_left": -c0,
-            "in_ysize": ysize, "in_xsize": xsize,
-            "src_nrows": r1 - r0, "src_ncols": c1 - c0,
-            "b_top": 0, "b_left": 0, "b_ysize": r1 - r0, "b_xsize": c1 - c0,
-            "pixels": box.ravel(),
-        }
+        top, left, canvas = _tile_canvas(tbl, nullval)
+        _fold_arrow_group(cols, offsets, values, canvas, nullval, "last", None, key)
+        box, row = _bbox_row(canvas != nullval, key, top, left)
+        row["pixels"] = canvas[box].ravel()
         return _rows_to_arrow([row], out_schema)
 
     return partial
@@ -376,39 +394,19 @@ def make_blend_partial_fn_arrow(grid: OutputGrid, feather: int, binary: bool = F
     )
 
     def partial(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col, salt = (
-            int(k.as_py() if hasattr(k, "as_py") else k) for k in key
-        )
+        key = _group_key(key)
         cols, offsets, values = _extract_arrow_group(tbl)
-        top, left = int(cols["top"][0]), int(cols["left"][0])
-        ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)  # unused sink
-        best = _blend_state(ysize, xsize, feather)
-        _fold_arrow_group(cols, offsets, values, canvas, nullval, "blend", best,
-                          (band, tile_row, tile_col, salt))
+        top, left, canvas = _tile_canvas(tbl, nullval)  # canvas: unused sink
+        best = _blend_state(*canvas.shape, feather)
+        _fold_arrow_group(cols, offsets, values, canvas, nullval, "blend", best, key)
         wsum, wvsum, _ = best
-        nz_rows = np.flatnonzero((wsum > 0).any(axis=1))
-        nz_cols = np.flatnonzero((wsum > 0).any(axis=0))
-        if nz_rows.size == 0:
-            r0, r1, c0, c1 = 0, 1, 0, 1
-        else:
-            r0, r1 = int(nz_rows[0]), int(nz_rows[-1]) + 1
-            c0, c1 = int(nz_cols[0]), int(nz_cols[-1]) + 1
-        row = {
-            "tile_row": tile_row, "tile_col": tile_col, "band": band,
-            "top": top, "left": left, "ysize": ysize, "xsize": xsize,
-            "priority": salt,
-            "in_top": -r0, "in_left": -c0,
-            "in_ysize": ysize, "in_xsize": xsize,
-            "src_nrows": r1 - r0, "src_ncols": c1 - c0,
-            "b_top": 0, "b_left": 0, "b_ysize": r1 - r0, "b_xsize": c1 - c0,
-        }
+        box, row = _bbox_row(wsum > 0, key, top, left)
         arrs = []
         for field in out_schema:
             if field.name == "pixels":
                 arrs.append(pa.nulls(1, field.type))
             elif field.name in ("wsum", "wvsum"):
-                payload = (wsum if field.name == "wsum" else wvsum)[r0:r1, c0:c1].ravel()
+                payload = (wsum if field.name == "wsum" else wvsum)[box].ravel()
                 arrs.append(pa.ListArray.from_arrays(
                     pa.array([0, payload.size], pa.int32()),
                     pa.array(payload, pa.int64()),
@@ -435,22 +433,15 @@ def make_blend_stitch_fn_arrow(
     out_schema = _binary_pixel_schema(ARROW_STITCH_SCHEMA) if binary else ARROW_STITCH_SCHEMA
 
     def stitch(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col = (
-            int(k.as_py() if hasattr(k, "as_py") else k) for k in key
-        )
+        key = _group_key(key)
         mask = pc.is_valid(tbl.column("wsum").combine_chunks())
         raw_tbl = tbl.filter(pc.invert(mask))
         part_tbl = tbl.filter(mask)
-        top = int(tbl.column("top")[0].as_py())
-        left = int(tbl.column("left")[0].as_py())
-        ysize = int(tbl.column("ysize")[0].as_py())
-        xsize = int(tbl.column("xsize")[0].as_py())
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)
-        best = _blend_state(ysize, xsize, feather)
+        top, left, canvas = _tile_canvas(tbl, nullval)
+        best = _blend_state(*canvas.shape, feather)
         if raw_tbl.num_rows:
             cols, offsets, values = _extract_arrow_group(raw_tbl)
-            _fold_arrow_group(cols, offsets, values, canvas, nullval, "blend", best,
-                              (band, tile_row, tile_col))
+            _fold_arrow_group(cols, offsets, values, canvas, nullval, "blend", best, key)
         if part_tbl.num_rows:
             wsum_t, wvsum_t, _ = best
             geo = {
@@ -467,61 +458,7 @@ def make_blend_stitch_fn_arrow(
                 wsum_t[r0: r0 + h, c0: c0 + w] += ws_val[ws_off[i]: ws_off[i + 1]].reshape(h, w)
                 wvsum_t[r0: r0 + h, c0: c0 + w] += wv_val[wv_off[i]: wv_off[i + 1]].reshape(h, w)
         _finalize_policy(canvas, "blend", best)
-        rows = [_base_row(band, tile_row, tile_col, top, left, canvas, nullval)]
-        rows.extend(
-            _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
-        )
-        return _rows_to_arrow(rows, out_schema)
-
-    return stitch
-
-
-def _pandas_pixel_arrays(col) -> list[np.ndarray]:
-    """Per-row pixel arrays from a pandas column of either layout
-    (int lists/arrays, or u2-packed bytes)."""
-    return [
-        np.frombuffer(p, dtype="<u2") if isinstance(p, (bytes, bytearray))
-        else np.asarray(p, dtype=np.int32)
-        for p in col
-    ]
-
-
-def make_stitch_fn(
-    grid: OutputGrid, levels: list[int], policy: str = "last", binary: bool = False,
-    feather: int = 64,
-):
-    """pandas (applyInPandas) variant of the stitch kernel — same
-    semantics as make_stitch_fn_arrow; kept for environments where the
-    Arrow grouped-map API is unavailable."""
-    nullval = int(grid.nullval)
-    ov_shapes = {lvl: overview_shape(grid.nrows, grid.ncols, lvl) for lvl in levels}
-
-    def stitch(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        band, tile_row, tile_col = (int(k) for k in key)
-        cols = {name: pdf[name].to_numpy() for name in _WINDOW_COLS}
-        arrays = _pandas_pixel_arrays(pdf["pixels"])
-        lengths = np.fromiter((len(a) for a in arrays), dtype=np.int64, count=len(arrays))
-        offsets = np.concatenate(([0], np.cumsum(lengths)))
-        values = (
-            np.concatenate([a.astype(np.int32, copy=False) for a in arrays])
-            if arrays
-            else np.array([], dtype=np.int32)
-        )
-        top, left = int(cols["top"][0]), int(cols["left"][0])
-        ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)
-        best = _policy_state(policy, ysize, xsize, feather)
-        _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best,
-                          (band, tile_row, tile_col))
-        _finalize_policy(canvas, policy, best)
-        rows = [_base_row(band, tile_row, tile_col, top, left, canvas, nullval)]
-        rows.extend(
-            _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
-        )
-        if binary:
-            for r in rows:
-                r["pixels"] = np.ascontiguousarray(r["pixels"].astype("<u2")).tobytes()
-        return pd.DataFrame(rows)
+        return _emit_tile(key, top, left, canvas, nullval, levels, ov_shapes, out_schema)
 
     return stitch
 

@@ -21,12 +21,11 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..mosaic import MosaicConfig, MosaicResult, _contributor_chunks, _null_tile_rows
-from ..operators.stats import finalize_stats
-from ..operators.stitch import make_stitch_fn, make_stitch_fn_arrow
+from ..mosaic import (
+    MosaicConfig, MosaicResult, _contributor_chunks, _restrict_tiles, _stitch_tail,
+)
 from ..plans.grid import OutputGrid, make_output_grid, make_tile_relation, overview_levels
 from ..plans.spatial_join import assign_inputs
-from ..schema import STITCH_SCHEMA
 
 
 def fingerprint_agg_cols() -> list:
@@ -379,8 +378,9 @@ def stitch_from_relayout(
     tile_keys: DataFrame | None = None,
 ) -> MosaicResult:
     """Stitch straight off the bucketed work table — no join, no
-    Exchange. ``config`` may override kernel/merge_policy/overviews; the
-    grid and tiling geometry come from the relayout metadata.
+    Exchange. ``config`` may override merge_policy/blend_feather/
+    with_overviews; the grid and tiling geometry come from the relayout
+    metadata.
 
     ``tile_row_range=(lo, hi)`` restricts the stitch to a tile-row
     range; the predicate lands in the bucketed SCAN (PushedFilters), so
@@ -411,65 +411,13 @@ def stitch_from_relayout(
         if config.with_overviews
         else []
     )
-    work = spark.table(table)
-    if tile_row_range is not None:
-        lo, hi = tile_row_range
-        work = work.where(
-            (F.col("tile_row") >= F.lit(int(lo))) & (F.col("tile_row") < F.lit(int(hi)))
-        )
-    if tile_keys is not None:
-        keys = tile_keys.select("tile_row", "tile_col").distinct()
-        work = work.join(F.broadcast(keys), on=["tile_row", "tile_col"], how="left_semi")
+    work = _restrict_tiles(spark.table(table), tile_row_range, tile_keys)
     # pixel layout follows the bucketed table (set when it was relaid)
     from ..pixels import pixels_are_binary
-    from ..schema import STITCH_SCHEMA_U2
 
-    binary = pixels_are_binary(work)
-    stitch_schema = STITCH_SCHEMA_U2 if binary else STITCH_SCHEMA
-    grouped = work.groupBy("band", "tile_row", "tile_col")
-    if config.kernel == "arrow":
-        stitched = grouped.applyInArrow(
-            make_stitch_fn_arrow(grid, levels, config.merge_policy, binary=binary,
-                                 feather=config.blend_feather),
-            stitch_schema,
-        )
-    else:
-        stitched = grouped.applyInPandas(
-            make_stitch_fn(grid, levels, config.merge_policy, binary=binary,
-                           feather=config.blend_feather),
-            stitch_schema,
-        )
-
-    tiles = make_tile_relation(spark, grid, blocksize)
-    if tile_row_range is not None:
-        lo, hi = tile_row_range
-        tiles = tiles.where(
-            (F.col("tile_row") >= F.lit(int(lo))) & (F.col("tile_row") < F.lit(int(hi)))
-        )
-    if tile_keys is not None:
-        tiles = tiles.join(
-            F.broadcast(tile_keys.select("tile_row", "tile_col").distinct()),
-            on=["tile_row", "tile_col"],
-            how="left_semi",
-        )
-    gap_tiles = tiles.join(
-        work.select("tile_row", "tile_col").distinct(),
-        on=["tile_row", "tile_col"],
-        how="left_anti",
+    tiles = _restrict_tiles(
+        make_tile_relation(spark, grid, blocksize), tile_row_range, tile_keys
     )
-    stitched = stitched.unionByName(
-        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews,
-                        binary=binary)
-    )
-    return MosaicResult(
-        grid=grid,
-        levels=levels,
-        tiles=stitched.where(F.col("level") == 0),
-        overviews=stitched.where(F.col("level") > 0),
-        stats=finalize_stats(stitched),
-        assignments=work.select(
-            "tile_row", "tile_col", "media_ref", "priority"
-        ).distinct(),
-        stitched=stitched,
-        blocksize=blocksize,
-    )
+    assignments = work.select("tile_row", "tile_col", "media_ref", "priority").distinct()
+    return _stitch_tail(spark, work, tiles, work, assignments, grid, levels, config,
+                        blocksize, pixels_are_binary(work))

@@ -61,6 +61,9 @@ def test_tile_range_prunes_input_side(spark, corpus):
     plan = lo_half.tiles._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
+    # one stitch kernel, and it is the Arrow one
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
     above = plan.split("FlatMapGroupsInArrow")[0]
     for line in above.splitlines():
         if "Filter" in line:

@@ -137,3 +137,19 @@ def test_projection_mismatch_raises(spark):
     pdf.loc[1, "x0"] += 3.0  # misaligned by 0.3 px
     with pytest.raises(MoaProjectionError):
         validate_projections(to_footprints(spark, pdf))
+
+
+def test_check_blocks(spark):
+    """check_blocks=True: a blocks table missing one source's band fails
+    up front naming it; a complete table mosaics as usual."""
+    rasters = synth.golden_pair(64, 64, n_bands=2)
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
+    cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False,
+                       check_blocks=True)
+    partial = blocks.where(~((blocks.media_ref == "r001") & (blocks.band == 2)))
+    with pytest.raises(ValueError, match="r001/b2"):
+        do_mosaic(spark, fp, partial, cfg)
+
+    want, got = run_case(spark, rasters, blocksize=64, min_ov=9999, check_blocks=True)
+    check_tiles_equal(want, got)

@@ -144,6 +144,9 @@ def _no_stitch_exchange(res, spark) -> bool:
     plan = res.stitched._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
+    # one stitch kernel, and it is the Arrow one
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
     flatmap_region = plan.split("FlatMapGroupsInArrow")[1]
     scan_pos = flatmap_region.find("FileScan")
     return "Exchange" not in flatmap_region[:scan_pos]
