@@ -94,11 +94,17 @@ class MosaicResult:
 
 def _summary_row(footprints: DataFrame, with_fingerprint: bool = False):
     """ONE aggregate over the footprint dim table carrying everything
-    do_mosaic needs up front: P6/P7 agreement counts, the
+    do_mosaic needs up front: P6/P7 agreement checks, the
     priority-first struct, the A1 extent, and (optionally) the relayout
     fingerprint — one driver round trip where validate + grid +
     fingerprint used to be three (guide §5: collects are full driver
     round trips; batch them)."""
+    def n_values(c):
+        # 1 if the non-null values agree, else 2: the checks only ask
+        # "more than one?", and countDistinct would plan an Expand plus
+        # two extra shuffle stages
+        return F.coalesce((F.min(c) != F.max(c)).cast("int"), F.lit(0)) + 1
+
     first = F.min_by(
         F.struct(
             "projection", "x_res", "y_res", "x0", "y0",
@@ -107,9 +113,9 @@ def _summary_row(footprints: DataFrame, with_fingerprint: bool = False):
         F.col("priority"),
     )
     aggs = [
-        F.countDistinct("projection").alias("n_proj"),
-        F.countDistinct("x_res").alias("n_xres"),
-        F.countDistinct("y_res").alias("n_yres"),
+        n_values("projection").alias("n_proj"),
+        n_values("x_res").alias("n_xres"),
+        n_values("y_res").alias("n_yres"),
         first.alias("first"),
         F.min(F.col("x0")).alias("x_min"),
         F.max(F.col("x0") + F.col("ncols") * F.col("x_res")).alias("x_max"),
@@ -323,56 +329,57 @@ def _null_tile_rows(
     gap_tiles: DataFrame,
     grid: OutputGrid,
     levels: list,
-    with_overviews: bool,
     binary: bool = False,
 ) -> DataFrame:
     """Tiles intersecting no input: pure-null fill, written without any
     read or merge (reference mosaic.py:351-359) — synthesized JVM-side
     (array_repeat / hex-repeat for the u2 layout), never touching
-    Python."""
+    Python.
+
+    ONE branch covers every pyramid level: each gap tile inlines an
+    array of per-level (level, y_off, x_off, nr, nc) fragments: level 0
+    (the tile itself), then one per entry of ``levels`` (empty when
+    overviews are off). A union of one select per level would
+    re-plan ``gap_tiles`` — the anti-join over the whole spatial join —
+    once per level, each copy with its own scans and exchanges."""
     from .pixels import repeat_u2
 
     nullval = int(grid.nullval)
     bands = spark.range(1, grid.n_bands + 1).select(F.col("id").cast("int").alias("band"))
-    g = gap_tiles.crossJoin(bands)
 
-    def null_rows(sel_level, y_off, x_off, nr, nc):
-        n_px = (nr * nc).cast("int")
-        px = (
-            repeat_u2(nullval, n_px) if binary
-            else F.array_repeat(F.lit(nullval), n_px)
+    def frag(lvl, y_off, x_off, nr, nc):
+        return F.struct(
+            F.lit(lvl).alias("level"), y_off.cast("int").alias("y_off"),
+            x_off.cast("int").alias("x_off"), nr.cast("int").alias("nr"),
+            nc.cast("int").alias("nc"),
         )
-        return [
-            F.lit(sel_level).cast("int").alias("level"),
-            F.col("band"),
-            F.col("tile_row"),
-            F.col("tile_col"),
-            y_off.cast("int").alias("y_off"),
-            x_off.cast("int").alias("x_off"),
-            nr.cast("int").alias("ysize"),
-            nc.cast("int").alias("xsize"),
-            px.alias("pixels"),
-            F.lit(0).cast("long").alias("px_count"),
-            F.lit(0.0).alias("px_sum"),
-            F.lit(0.0).alias("px_ssq"),
-            F.lit(None).cast("double").alias("px_min"),
-            F.lit(None).cast("double").alias("px_max"),
-        ]
 
-    out = g.select(*null_rows(0, F.col("top"), F.col("left"), F.col("ysize"), F.col("xsize")))
-    if with_overviews:
-        for lvl in levels:
-            o = lvl // 2
-            ov_nr, ov_nc = gridmod.overview_shape(grid.nrows, grid.ncols, lvl)
-            frag_nr = F.when(F.col("ysize") > o, ((F.col("ysize") - 1 - o) / lvl + 1).cast("int")).otherwise(F.lit(0))
-            frag_nc = F.when(F.col("xsize") > o, ((F.col("xsize") - 1 - o) / lvl + 1).cast("int")).otherwise(F.lit(0))
-            y_off = (F.col("top") / lvl).cast("int")
-            x_off = (F.col("left") / lvl).cast("int")
-            nr = F.least(frag_nr, F.lit(ov_nr) - y_off)
-            nc = F.least(frag_nc, F.lit(ov_nc) - x_off)
-            frag = g.where((nr > 0) & (nc > 0)).select(*null_rows(lvl, y_off, x_off, nr, nc))
-            out = out.unionByName(frag)
-    return out
+    frags = [frag(0, F.col("top"), F.col("left"), F.col("ysize"), F.col("xsize"))]
+    for lvl in levels:
+        o = lvl // 2
+        ov_nr, ov_nc = gridmod.overview_shape(grid.nrows, grid.ncols, lvl)
+        frag_nr = F.when(F.col("ysize") > o, ((F.col("ysize") - 1 - o) / lvl + 1).cast("int")).otherwise(F.lit(0))
+        frag_nc = F.when(F.col("xsize") > o, ((F.col("xsize") - 1 - o) / lvl + 1).cast("int")).otherwise(F.lit(0))
+        y_off = (F.col("top") / lvl).cast("int")
+        x_off = (F.col("left") / lvl).cast("int")
+        frags.append(frag(lvl, y_off, x_off, F.least(frag_nr, F.lit(ov_nr) - y_off),
+                          F.least(frag_nc, F.lit(ov_nc) - x_off)))
+    g = gap_tiles.crossJoin(bands).select(
+        "band", "tile_row", "tile_col", F.inline(F.array(*frags))
+    ).where((F.col("nr") > 0) & (F.col("nc") > 0))
+    n_px = (F.col("nr") * F.col("nc")).cast("int")
+    px = repeat_u2(nullval, n_px) if binary else F.array_repeat(F.lit(nullval), n_px)
+    return g.select(
+        "level", "band", "tile_row", "tile_col", "y_off", "x_off",
+        F.col("nr").alias("ysize"),
+        F.col("nc").alias("xsize"),
+        px.alias("pixels"),
+        F.lit(0).cast("long").alias("px_count"),
+        F.lit(0.0).alias("px_sum"),
+        F.lit(0.0).alias("px_ssq"),
+        F.lit(None).cast("double").alias("px_min"),
+        F.lit(None).cast("double").alias("px_max"),
+    )
 
 
 def _restrict_tiles(
@@ -413,14 +420,15 @@ def _stitch_tail(
     stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(
         kernel, STITCH_SCHEMA_U2 if binary else STITCH_SCHEMA
     )
+    # no distinct on the covered keys: duplicates cannot change a
+    # left-anti result, and the aggregate would cost its own shuffle
     gap_tiles = tiles.join(
-        covered.select("tile_row", "tile_col").distinct(),
+        covered.select("tile_row", "tile_col"),
         on=["tile_row", "tile_col"],
         how="left_anti",
     )
     stitched = stitched.unionByName(
-        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews,
-                        binary=binary)
+        _null_tile_rows(spark, gap_tiles, grid, levels, binary=binary)
     )
     return MosaicResult(
         grid=grid,

@@ -35,3 +35,26 @@ def to_blocks(spark, pdf):
 def to_documents(spark, pdf):
     recs = pdf.to_dict("records")
     return spark.createDataFrame(recs, schema=DOCUMENTS_SCHEMA)
+
+
+def plan_nodes(df) -> list:
+    """simpleString of every operator in ``df``'s executed physical plan,
+    descending through AQE wrappers and their query stages (a reused
+    exchange is listed but not descended: its subtree runs once). Run an
+    action on ``df`` first so the AQE plan is the final one."""
+    out = []
+
+    def walk(p):
+        name = p.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            return walk(p.executedPlan())
+        if name.endswith("QueryStage"):
+            return walk(p.plan())
+        out.append(p.simpleString(100))
+        if not name.startswith("ReusedExchange"):
+            ch = p.children()
+            for i in range(ch.size()):
+                walk(ch.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out

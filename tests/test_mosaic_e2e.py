@@ -9,7 +9,7 @@ import pytest
 from moamosaic_spark.mosaic import MoaProjectionError, MosaicConfig, do_mosaic, validate_projections
 from moamosaic_spark.plans.grid import overview_shape
 from moamosaic_spark.sources import synth
-from tests.conftest import to_blocks, to_footprints
+from tests.conftest import plan_nodes, to_blocks, to_footprints
 
 
 def run_case(spark, rasters, blocksize=128, min_ov=64, strategy="broadcast", **kw):
@@ -107,6 +107,30 @@ def test_gap_null_fill(spark):
     check_overviews_equal(want, got)
 
 
+@pytest.mark.parametrize("strategy", ["broadcast", "cell"])
+def test_gap_fill_plan_does_not_grow_with_levels(spark, tmp_path, strategy):
+    """The gap-tile fill plans ONE anti-join, and the footprints are
+    scanned as often with a pyramid of >= 2 levels as without one."""
+    rasters = synth.with_gap(200, 200)
+    src = str(tmp_path / "footprints")
+    to_footprints(spark, synth.footprints_pdf(rasters)).write.parquet(src)
+    fp = spark.read.parquet(src)
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
+    scans = {}
+    for with_ov in (True, False):
+        res = do_mosaic(spark, fp, blocks, MosaicConfig(
+            blocksize=64, src_blocksize=256, min_overview_size=32,
+            strategy=strategy, with_overviews=with_ov,
+        ))
+        assert len(res.levels) >= 2 if with_ov else res.levels == []
+        res.stitched.collect()
+        nodes = plan_nodes(res.stitched)
+        assert sum("LeftAnti" in n for n in nodes) == 1, nodes
+        # x_res: only the footprints table carries it
+        scans[with_ov] = sum(n.startswith("FileScan") and "x_res" in n for n in nodes)
+    assert scans[True] == scans[False] > 0, scans
+
+
 def test_multiband(spark):
     want, got = run_case(spark, synth.golden_pair(200, 200, n_bands=2))
     check_tiles_equal(want, got)
@@ -137,6 +161,11 @@ def test_projection_mismatch_raises(spark):
     pdf.loc[1, "x0"] += 3.0  # misaligned by 0.3 px
     with pytest.raises(MoaProjectionError):
         validate_projections(to_footprints(spark, pdf))
+    for res_col in ("x_res", "y_res"):
+        pdf = synth.footprints_pdf(rasters)
+        pdf.loc[1, res_col] *= 2
+        with pytest.raises(MoaProjectionError, match="Pixel size mis-match"):
+            validate_projections(to_footprints(spark, pdf))
 
 
 def test_check_blocks(spark):

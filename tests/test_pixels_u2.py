@@ -38,6 +38,23 @@ def _tiles_of(res, binary):
     return out
 
 
+def _u2_overview_canvases(res, want):
+    """Band-1 overview canvases {level: array} pasted from the packed
+    fragments; each pixel must be written by exactly one fragment."""
+    by_lvl, hits = {}, {}
+    for r in res.overviews.collect():
+        assert r.band == 1
+        arr = np.frombuffer(bytes(r.pixels), "<u2").reshape(r.ysize, r.xsize)
+        shape = want.overviews[(1, r.level)].shape
+        c = by_lvl.setdefault(r.level, np.full(shape, -1, dtype=np.int64))
+        h = hits.setdefault(r.level, np.zeros(shape, dtype=np.int64))
+        c[r.y_off:r.y_off + r.ysize, r.x_off:r.x_off + r.xsize] = arr
+        h[r.y_off:r.y_off + r.ysize, r.x_off:r.x_off + r.xsize] += 1
+    for lvl, h in hits.items():
+        assert (h == 1).all(), f"level {lvl}: fragments miss or overlap pixels"
+    return by_lvl
+
+
 def test_pack_unpack_roundtrip(spark):
     vals = [0, 1, 255, 256, 4097, 65535]
     df = spark.createDataFrame([(vals,)], "parr array<int>")
@@ -65,13 +82,7 @@ def test_u2_mosaic_equals_i4_and_oracle(spark):
         np.testing.assert_array_equal(t_b[k], want.tiles[k], err_msg=f"oracle {k}")
 
     # overview fragments also ride packed and assemble to the oracle
-    by_lvl = {}
-    for r in res_b.overviews.collect():
-        arr = np.frombuffer(bytes(r.pixels), "<u2").reshape(r.ysize, r.xsize)
-        c = by_lvl.setdefault(
-            r.level, np.full(want.overviews[(1, r.level)].shape, -1, dtype=np.int64)
-        )
-        c[r.y_off:r.y_off + r.ysize, r.x_off:r.x_off + r.xsize] = arr
+    by_lvl = _u2_overview_canvases(res_b, want)
     assert by_lvl, "fixture should produce overview levels"
     for lvl, c in by_lvl.items():
         np.testing.assert_array_equal(c, want.overviews[(1, lvl)])
@@ -102,6 +113,30 @@ def test_u2_gap_and_salted(spark):
     assert set(tiles) == set(want.tiles)
     for k, a in tiles.items():
         np.testing.assert_array_equal(a, want.tiles[k])
+
+
+def test_u2_gap_with_overviews(spark):
+    """Packed null fragments of gap tiles on every pyramid level — 201
+    rows in tiles of 64, so the gap tiles of the last tile row (9 rows)
+    clip at each level."""
+    rasters = synth.with_gap(201, 203)
+    want = synth.oracle(rasters, blocksize=64, min_overview_size=32)
+    fp, bl = _fp_blocks(spark, rasters, "u2")
+    res = do_mosaic(
+        spark, fp, bl, MosaicConfig(blocksize=64, src_blocksize=256, min_overview_size=32)
+    )
+    assert len(res.levels) >= 2
+    tiles = _tiles_of(res, binary=True)
+    assert set(tiles) == set(want.tiles)
+    nv = int(rasters[0].nullval)
+    assert any((a == nv).all() for a in tiles.values()), "fixture should have gap tiles"
+    for k, a in tiles.items():
+        np.testing.assert_array_equal(a, want.tiles[k])
+
+    by_lvl = _u2_overview_canvases(res, want)
+    assert sorted(by_lvl) == res.levels
+    for lvl, c in by_lvl.items():
+        np.testing.assert_array_equal(c, want.overviews[(1, lvl)], err_msg=f"level {lvl}")
 
 
 def test_u2_halves_shuffle_payload_bytes(spark):
